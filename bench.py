@@ -96,7 +96,10 @@ BENCH_QUERIES = [
 
 
 def main() -> None:
-    from incremental_etl_on_lakehouse_spark.queries import QUERIES
+    from incremental_etl_on_lakehouse_spark.queries import (
+        QUERIES,
+        reset_memoized_state,
+    )
     from incremental_etl_on_lakehouse_spark.session import get_spark
 
     # clear stale scratch tables from earlier runs (they are this repo's own
@@ -137,17 +140,6 @@ def main() -> None:
     # cross-round 2x move on one of them can be classified as contention
     # (min stable, median moved) vs a real plan change (both moved).
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
-
-    def reset_memoized_state() -> None:
-        """Drop the CDC scenario memoization so every sample of the merge
-        keys rebuilds end-to-end instead of re-reading a cached table."""
-        from incremental_etl_on_lakehouse_spark import queries as qmod
-
-        qmod._CDC_SILVER_CACHE.clear()
-        qmod._CDC_GOLD_CACHE.clear()
-        qmod._CDC_MINMAX_CACHE.clear()
-        qmod._CDC_TOPK_CACHE.clear()
-        qmod._JOIN_VIEW_CACHE.clear()
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}

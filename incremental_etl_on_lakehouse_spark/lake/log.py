@@ -29,7 +29,12 @@ DATA_DIR = "data"
 @dataclass
 class Commit:
     version: int
-    operation: str  # CREATE | APPEND | MERGE | OVERWRITE | DELETE
+    # What wrote the commit. LakeTable writes: CREATE, CONVERT, CLONE,
+    # REPLACE (REPLACE TABLE and replaceWhere), ADD/DROP CONSTRAINT,
+    # ADD/DROP/RENAME COLUMN(S), SET/UNSET TBLPROPERTIES, APPEND, OVERWRITE,
+    # DELETE, UPDATE, MERGE, COMPACT, RESTORE — plus any name a caller passes
+    # to ``LakeTable.append(operation=...)`` (e.g. COPY INTO).
+    operation: str
     timestamp_ms: int
     add: list[dict] = field(default_factory=list)  # {"path": rel, "rows": int}
     remove: list[str] = field(default_factory=list)

@@ -32,7 +32,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from incremental_etl_on_lakehouse_spark.lake import log as lakelog
 from incremental_etl_on_lakehouse_spark.lake.log import CDF_DIR, DATA_DIR, Commit
@@ -86,6 +94,13 @@ def _reader_features_from_props(props: dict) -> set[str]:
     return feats
 
 
+def _recorded_reader_features(props: dict) -> set[str]:
+    """Features listed in a table's ``protocol.readerFeatures`` property."""
+    return {
+        f for f in str(props.get("protocol.readerFeatures", "")).split(",") if f
+    }
+
+
 class ConstraintViolationError(ValueError):
     """A write produced rows that violate a table CHECK constraint; the
     staged files were discarded and no commit was made."""
@@ -102,6 +117,23 @@ def _bq(name: str) -> str:
     """Escape a column name for use inside SQL backquotes (doubling any
     embedded backtick, Spark's identifier-quoting rule)."""
     return name.replace("`", "``")
+
+
+def _sql_type(dt: DataType) -> str:
+    """SQL spelling of a type for spliced CAST expressions (Scala's
+    ``DataType.sql``): nested struct field names are backtick-quoted, so a
+    field named like ``content-type`` parses — ``simpleString()`` leaves
+    them bare."""
+    if isinstance(dt, StructType):
+        fields = ", ".join(
+            f"`{_bq(f.name)}`: {_sql_type(f.dataType)}" for f in dt.fields
+        )
+        return f"STRUCT<{fields}>"
+    if isinstance(dt, ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return f"MAP<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 def _json_safe(v):
@@ -619,16 +651,7 @@ class LakeTable:
         # incarnation's cached checkpoint cadence
         lakelog.invalidate_ckpt_interval(t.path)
         os.makedirs(t.path, exist_ok=True)
-        lakelog.write_commit(
-            t.path,
-            Commit(
-                version=0,
-                operation="CREATE",
-                timestamp_ms=lakelog.now_ms(),
-                schema_json=schema.json(),
-                properties=props,
-            ),
-        )
+        t._commit(None, "CREATE", schema_json=schema.json(), properties=props)
         return t
 
     @staticmethod
@@ -730,20 +753,16 @@ class LakeTable:
             props.setdefault("statsColumns", ",".join(stats_columns))
         if part_cols:
             props["partitionBy"] = ",".join(part_cols)
-        lakelog.write_commit(
-            t.path,
-            Commit(
-                version=0,
-                operation="CONVERT",
-                timestamp_ms=lakelog.now_ms(),
-                add=adds,
-                schema_json=schema.json(),
-                properties=props,
-                metrics={
-                    "num_files": len(adds),
-                    "num_rows": sum(a["rows"] for a in adds),
-                },
-            ),
+        t._commit(
+            None,
+            "CONVERT",
+            add=adds,
+            schema_json=schema.json(),
+            properties=props,
+            metrics={
+                "num_files": len(adds),
+                "num_rows": sum(a["rows"] for a in adds),
+            },
         )
         return t
 
@@ -791,11 +810,9 @@ class LakeTable:
             props["statsColumns"] = ",".join(
                 existing + [c for c in id_cols if c not in existing]
             )
-        feats = _reader_features_from_props(props) | {
-            f
-            for f in str(props.get("protocol.readerFeatures", "")).split(",")
-            if f
-        }
+        feats = _reader_features_from_props(props) | _recorded_reader_features(
+            props
+        )
         if feats:
             props["protocol.readerFeatures"] = ",".join(sorted(feats))
         return props
@@ -815,15 +832,13 @@ class LakeTable:
         not configuration, and survive). History survives: time travel
         to pre-replace versions projects the old schema and data, and
         identity high-water marks reset with the definition."""
-        commits = self._commits()
         # checkpoint-aware active set, NOT a fold over self._commits():
         # after cleanup_log() truncates the log, files added before the
         # retention boundary but still active survive only in the pinned
         # checkpoint — a commit-list fold would miss them and REPLACE
         # would leave their rows live under the new definition
-        state = self._state()
-        removed = list(state["active"])
-        dvmap = state.get("dv") or {}
+        base = self._state()
+        removed = list(base["active"])
         props = LakeTable._derive_definition_props(
             schema, properties, partition_by
         )
@@ -835,23 +850,17 @@ class LakeTable:
         # definition, as documented.
         tombstones = {
             k: None
-            for k in self.properties()
+            for k in base["properties"]
             if k not in props and not k.startswith("txn.")
         }
-        v = commits[-1].version + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="REPLACE",
-                timestamp_ms=lakelog.now_ms(),
-                remove=removed + self._dv_release(removed, dvmap),
-                schema_json=schema.json(),
-                properties={**tombstones, **props},
-                metrics={"num_removed_files": len(removed)},
-            ),
+        return self._commit(
+            base,
+            "REPLACE",
+            remove=removed,
+            schema_json=schema.json(),
+            properties={**tombstones, **props},
+            metrics={"num_removed_files": len(removed)},
         )
-        return v
 
     def clone(self, dest_path: str, shallow: bool = True) -> "LakeTable":
         """CLONE (Delta's ``CREATE TABLE ... [SHALLOW|DEEP] CLONE src``).
@@ -927,20 +936,17 @@ class LakeTable:
         props = dict(state["properties"])
         props["clonedFrom"] = self.path
         props["cloneShallow"] = "true" if shallow else "false"
-        lakelog.write_commit(
-            dest,
-            Commit(
-                version=0,
-                operation="CLONE",
-                timestamp_ms=lakelog.now_ms(),
-                add=adds,
-                dv=clone_dv,
-                schema_json=state["schema_json"],
-                properties=props,
-                metrics={"num_files": len(adds), "shallow": shallow},
-            ),
+        clone = LakeTable(self.spark, dest)
+        clone._commit(
+            None,
+            "CLONE",
+            add=adds,
+            dv=clone_dv,
+            schema_json=state["schema_json"],
+            properties=props,
+            metrics={"num_files": len(adds), "shallow": shallow},
         )
-        return LakeTable(self.spark, dest)
+        return clone
 
     @staticmethod
     def exists(path: str) -> bool:
@@ -962,10 +968,7 @@ class LakeTable:
         processed commit, and re-parsing the whole log each time made
         catch-up O(commits²) file reads. Treat the returned list as
         READ-ONLY."""
-        commit_vs, _ = lakelog.list_versions(self.path)
-        if not commit_vs:
-            raise ValueError(f"not a lake table: {self.path}")
-        latest = commit_vs[-1]
+        latest = self.version()
         cached = getattr(self, "_commits_memo", None)
         if cached is not None and cached[0] == latest:
             return cached[1]
@@ -985,24 +988,18 @@ class LakeTable:
         is the latest commit version (one directory listing), so any
         commit — ours or a concurrent writer's — invalidates it.
         """
-        if version is None:
-            commit_vs, _ = lakelog.list_versions(self.path)
-            if not commit_vs:
-                raise ValueError(f"not a lake table: {self.path}")
-            latest = commit_vs[-1]
-            cached = getattr(self, "_state_memo", None)
-            if cached is not None and cached[0] == latest:
-                return cached[1]
-            state = lakelog.table_state(self.path, latest)
-            if state is None:
-                raise ValueError(f"not a lake table: {self.path}")
-            self._check_reader_features(state)
-            self._state_memo = (latest, state)
-            return state
-        state = lakelog.table_state(self.path, version)
+        latest = self.version() if version is None else None
+        cached = getattr(self, "_state_memo", None)
+        if latest is not None and cached is not None and cached[0] == latest:
+            return cached[1]
+        state = lakelog.table_state(
+            self.path, latest if version is None else version
+        )
         if state is None:
             raise ValueError(f"not a lake table: {self.path}")
         self._check_reader_features(state)
+        if latest is not None:
+            self._state_memo = (latest, state)
         return state
 
     def _check_reader_features(self, state: dict) -> None:
@@ -1011,20 +1008,97 @@ class LakeTable:
         that ignores an unknown read-semantics feature (a future deletion
         encoding, a new column-mapping mode) would silently return wrong
         rows. Delta's reader-version/table-features contract."""
-        feats = {
-            f
-            for f in str(
-                state["properties"].get("protocol.readerFeatures", "")
-            ).split(",")
-            if f
-        }
-        unknown = feats - SUPPORTED_READER_FEATURES
+        unknown = (
+            _recorded_reader_features(state["properties"])
+            - SUPPORTED_READER_FEATURES
+        )
         if unknown:
             raise ValueError(
                 f"table at {self.path} requires reader feature(s) "
                 f"{sorted(unknown)} this engine does not support "
                 f"(supported: {sorted(SUPPORTED_READER_FEATURES)})"
             )
+
+    # Operations that only re-publish rows the table already holds: their
+    # staged files never carry a new identity value.
+    _REWRITE_OPS = frozenset({"DELETE", "UPDATE", "COMPACT", "RESTORE"})
+
+    def _commit(
+        self,
+        base: dict | None,
+        operation: str,
+        *,
+        add: list[dict] | None = None,
+        remove: list[str] | None = None,
+        dv: dict | None = None,
+        cdf_path: str | None = None,
+        schema_json: str | None = None,
+        properties: dict | None = None,
+        metrics: dict | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> int:
+        """Publish one commit on top of ``base`` and return its version: the
+        table's single commit path (Delta's ``OptimisticTransaction``).
+
+        ``base`` is the snapshot (``self._state()``) the operation pinned
+        before it read anything; ``None`` creates the table at version 0.
+        Callers pass only what their operation decided — the files it
+        added and removed, deletion-vector reassignments (``{data_rel:
+        dv_rel | ""}``), the change-feed sidecar, a new schema, properties,
+        metrics and an optional ``(app_id, version)`` writer transaction.
+        Every other commit-path rule lives here:
+
+        - the version is ``base["version"] + 1``, so a commit that landed
+          after the pin makes this one collide (``FileExistsError``)
+          instead of being silently built over;
+        - the in-commit timestamp (clamped monotone by the log);
+        - deletion-vector release: a sidecar referenced before the commit
+          and by no file after it (given ``remove`` and ``dv``) is
+          appended to the remove list, so VACUUM reclaims it after
+          retention;
+        - identity high-water marks for the adds of row-inserting
+          operations (every operation outside ``_REWRITE_OPS``);
+        - the ``txn.<app_id>`` SetTransaction guard;
+        - auto compaction (``autoCompact``) after any write to an existing
+          table that added files, except COMPACT itself. Its version is
+          not the one returned.
+        """
+        version = 0 if base is None else base["version"] + 1
+        add = list(add or [])
+        remove = list(remove or [])
+        dv = dict(dv or {})
+        props = dict(properties or {})
+        if base is not None:
+            before = base.get("dv") or {}
+            gone = set(remove)
+            after = {f: d for f, d in before.items() if f not in gone}
+            after.update(dv)
+            remove += sorted(set(before.values()) - set(after.values()))
+            idcols = self._identity_columns_of(base["properties"])
+            if idcols and add and operation not in self._REWRITE_OPS:
+                props.update(
+                    self._identity_hwm_props(add, idcols, base["properties"])
+                )
+        if txn is not None:
+            props[f"txn.{txn[0]}"] = str(txn[1])
+        lakelog.write_commit(
+            self.path,
+            Commit(
+                version=version,
+                operation=operation,
+                timestamp_ms=lakelog.now_ms(),
+                add=add,
+                remove=remove,
+                schema_json=schema_json,
+                properties=props,
+                metrics=metrics or {},
+                cdf_path=cdf_path,
+                dv=dv,
+            ),
+        )
+        if base is not None and add and operation != "COMPACT":
+            self._maybe_auto_compact()
+        return version
 
     def version(self) -> int:
         commit_vs, _ = lakelog.list_versions(self.path)
@@ -1033,10 +1107,13 @@ class LakeTable:
         return commit_vs[-1]
 
     def schema(self) -> StructType:
-        schema_json = self._state()["schema_json"]
-        if not schema_json:
+        return self._state_schema(self._state())
+
+    @staticmethod
+    def _state_schema(state: dict) -> StructType:
+        if not state["schema_json"]:
             raise ValueError("no schema recorded")
-        return StructType.fromJson(__import__("json").loads(schema_json))
+        return StructType.fromJson(json.loads(state["schema_json"]))
 
     def properties(self) -> dict:
         return dict(self._state()["properties"])
@@ -1095,10 +1172,10 @@ class LakeTable:
         Returns the new version. SQL CHECK semantics: only rows where the
         expression is FALSE violate; NULL passes.
         """
+        base = self._state()
         if name in self.constraints():
             raise ValueError(f"constraint already exists: {name}")
-        snapshot_version = self.version()
-        if self.files():
+        if base["active"]:
             bad = (
                 self.to_df()
                 .where(~F.coalesce(F.expr(expr), F.lit(True)))
@@ -1109,18 +1186,12 @@ class LakeTable:
                 raise ConstraintViolationError(
                     f"existing rows violate CHECK ({expr}): {bad[0]}"
                 )
-        v = snapshot_version + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="ADD CONSTRAINT",
-                timestamp_ms=lakelog.now_ms(),
-                properties={CONSTRAINT_PREFIX + name: expr},
-                metrics={"name": name},
-            ),
+        return self._commit(
+            base,
+            "ADD CONSTRAINT",
+            properties={CONSTRAINT_PREFIX + name: expr},
+            metrics={"name": name},
         )
-        return v
 
     def add_not_null(self, col: str) -> int:
         """NOT NULL column invariant, recorded as CHECK (col IS NOT NULL)."""
@@ -1130,20 +1201,15 @@ class LakeTable:
 
     def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT name (tombstones the property)."""
+        base = self._state()
         if name not in self.constraints():
             raise ValueError(f"no such constraint: {name}")
-        v = self.version() + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="DROP CONSTRAINT",
-                timestamp_ms=lakelog.now_ms(),
-                properties={CONSTRAINT_PREFIX + name: ""},
-                metrics={"name": name},
-            ),
+        return self._commit(
+            base,
+            "DROP CONSTRAINT",
+            properties={CONSTRAINT_PREFIX + name: ""},
+            metrics={"name": name},
         )
-        return v
 
     def history(self) -> list[dict]:
         return [
@@ -1278,9 +1344,9 @@ class LakeTable:
         present = set(df.columns)
         cols = [
             (
-                f"CAST(`{_bq(f.name)}` AS {f.dataType.simpleString()})"
+                f"CAST(`{_bq(f.name)}` AS {_sql_type(f.dataType)})"
                 if f.name in present
-                else f"CAST(NULL AS {f.dataType.simpleString()})"
+                else f"CAST(NULL AS {_sql_type(f.dataType)})"
             )
             + f" AS `{_bq(self._physical_name(f))}`"
             for f in schema.fields
@@ -1300,7 +1366,8 @@ class LakeTable:
         constraints or statsColumns cannot be renamed without first
         dropping the dependent object.
         """
-        schema = self.schema()
+        base = self._state()
+        schema = self._state_schema(base)
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"no such column: {old}")
@@ -1332,33 +1399,21 @@ class LakeTable:
                 )
             else:
                 new_fields.append(f)
-        v = self.version() + 1
         # the first rename activates column mapping (files keep physical
         # names): a reader without it would project the renamed column as
         # missing — record the protocol feature in the same commit
-        current = {
-            f
-            for f in str(
-                self.properties().get("protocol.readerFeatures", "")
-            ).split(",")
-            if f
-        }
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="RENAME COLUMN",
-                timestamp_ms=lakelog.now_ms(),
-                schema_json=StructType(new_fields).json(),
-                properties={
-                    "protocol.readerFeatures": ",".join(
-                        sorted(current | {"columnMapping"})
-                    )
-                },
-                metrics={"from": old, "to": new},
-            ),
+        current = _recorded_reader_features(base["properties"])
+        return self._commit(
+            base,
+            "RENAME COLUMN",
+            schema_json=StructType(new_fields).json(),
+            properties={
+                "protocol.readerFeatures": ",".join(
+                    sorted(current | {"columnMapping"})
+                )
+            },
+            metrics={"from": old, "to": new},
         )
-        return v
 
     def add_columns(self, cols: list[tuple[str, "DataType"]]) -> int:
         """ALTER TABLE ADD COLUMNS — metadata-only schema widening (no data
@@ -1367,7 +1422,8 @@ class LakeTable:
         ``append(merge_schema=True)`` already uses; this is the explicit
         DDL spelling. New columns are nullable by definition (old rows
         cannot have values)."""
-        schema = self.schema()
+        base = self._state()
+        schema = self._state_schema(base)
         names = {f.name for f in schema.fields}
         for name, _ in cols:
             if name in names:
@@ -1375,18 +1431,12 @@ class LakeTable:
         new_fields = schema.fields + [
             StructField(name, dtype, True) for name, dtype in cols
         ]
-        v = self.version() + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="ADD COLUMNS",
-                timestamp_ms=lakelog.now_ms(),
-                schema_json=StructType(new_fields).json(),
-                metrics={"added": [n for n, _ in cols]},
-            ),
+        return self._commit(
+            base,
+            "ADD COLUMNS",
+            schema_json=StructType(new_fields).json(),
+            metrics={"added": [n for n, _ in cols]},
         )
-        return v
 
     def drop_column(self, col: str) -> int:
         """ALTER TABLE DROP COLUMN — metadata-only logical removal (Delta's
@@ -1395,7 +1445,8 @@ class LakeTable:
         partition columns, constraint-referenced columns, statsColumns,
         and generated/identity columns must have their dependents dropped
         first."""
-        schema = self.schema()
+        base = self._state()
+        schema = self._state_schema(base)
         if col not in {f.name for f in schema.fields}:
             raise ValueError(f"no such column: {col}")
         if len(schema.fields) == 1:
@@ -1419,20 +1470,26 @@ class LakeTable:
                 "remove the property first"
             )
         new_fields = [f for f in schema.fields if f.name != col]
-        v = self.version() + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="DROP COLUMN",
-                timestamp_ms=lakelog.now_ms(),
-                schema_json=StructType(new_fields).json(),
-                metrics={"dropped": col},
-            ),
+        return self._commit(
+            base,
+            "DROP COLUMN",
+            schema_json=StructType(new_fields).json(),
+            metrics={"dropped": col},
         )
-        return v
 
     _STRUCTURAL_PROPS = ("partitionBy",)
+
+    def _check_alterable(self, keys) -> None:
+        """Refuse SET/UNSET of creation-time-only properties. generated.*
+        is one: create() installs the implicit CHECK that holds writers to
+        the generation expression, so a post-hoc SET would yield a
+        half-enforced column (computed when absent, never gate-checked
+        when supplied)."""
+        for k in keys:
+            if k in self._STRUCTURAL_PROPS or k.startswith(
+                ("identity.", "generated.")
+            ):
+                raise ValueError(f"property {k} is fixed at table creation")
 
     def set_properties(self, props: dict) -> int:
         """ALTER TABLE SET TBLPROPERTIES — a metadata commit merging the
@@ -1440,64 +1497,26 @@ class LakeTable:
         statsColumns later in a table's life). Structural properties that
         reads depend on for file layout (``partitionBy``) and identity
         bookkeeping cannot be changed after creation."""
-        for k in props:
-            if (
-                k in self._STRUCTURAL_PROPS
-                or k.startswith("identity.")
-                or k.startswith("generated.")
-            ):
-                # generated.* is creation-time-only too: create() installs
-                # the implicit CHECK that holds writers to the generation
-                # expression; a post-hoc SET would yield a half-enforced
-                # column (computed when absent, never gate-checked when
-                # supplied)
-                raise ValueError(f"property {k} is fixed at table creation")
+        base = self._state()
+        self._check_alterable(props)
         out = {k: str(val) for k, val in props.items()}
         # enabling a read-semantics feature mid-life records it in the
         # protocol (union with whatever is already active)
         feats = _reader_features_from_props(out)
         if feats:
-            current = {
-                f
-                for f in str(
-                    self.properties().get("protocol.readerFeatures", "")
-                ).split(",")
-                if f
-            }
+            current = _recorded_reader_features(base["properties"])
             out["protocol.readerFeatures"] = ",".join(sorted(feats | current))
-        v = self.version() + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="SET TBLPROPERTIES",
-                timestamp_ms=lakelog.now_ms(),
-                properties=out,
-            ),
-        )
-        return v
+        return self._commit(base, "SET TBLPROPERTIES", properties=out)
 
     def unset_properties(self, keys: list[str]) -> int:
         """ALTER TABLE UNSET TBLPROPERTIES — removes properties via None
         markers in the commit (same restrictions as set_properties)."""
-        for k in keys:
-            if (
-                k in self._STRUCTURAL_PROPS
-                or k.startswith("identity.")
-                or k.startswith("generated.")
-            ):
-                raise ValueError(f"property {k} is fixed at table creation")
-        v = self.version() + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="UNSET TBLPROPERTIES",
-                timestamp_ms=lakelog.now_ms(),
-                properties={k: None for k in keys},
-            ),
+        self._check_alterable(keys)
+        return self._commit(
+            self._state(),
+            "UNSET TBLPROPERTIES",
+            properties={k: None for k in keys},
         )
-        return v
 
     def analyze(
         self, columns: list[str] | None = None, exact_ndv: bool = False
@@ -1948,11 +1967,11 @@ class LakeTable:
                 raise ValueError("pass version OR timestamp_ms, not both")
             version = self.version_at_timestamp(timestamp_ms)
         state = self._state(version)
-        schema = None
-        if version is not None and state.get("schema_json"):
-            schema = StructType.fromJson(
-                __import__("json").loads(state["schema_json"])
-            )
+        schema = (
+            self._state_schema(state)
+            if version is not None and state.get("schema_json")
+            else None
+        )
         return self._read_files(
             [self._abs(r) for r in state["active"]],
             dv_map=state.get("dv") or None,
@@ -1972,11 +1991,11 @@ class LakeTable:
         maintenance needs: the snapshot ⋈ Δbatch side reads only the files
         a batch's join-key range can touch, not the whole table."""
         state = self._state(version)
-        schema = None
-        if version is not None and state.get("schema_json"):
-            schema = StructType.fromJson(
-                __import__("json").loads(state["schema_json"])
-            )
+        schema = (
+            self._state_schema(state)
+            if version is not None and state.get("schema_json")
+            else None
+        )
         return self._read_files(
             self.files_matching(ranges, version=version),
             dv_map=state.get("dv") or None,
@@ -2258,10 +2277,49 @@ class LakeTable:
             else None
         )
 
+    def _touched_probe(
+        self,
+        base: dict,
+        condition: str | None,
+        with_lineage: bool = False,
+        row_ids: bool = False,
+    ):
+        """The touched-file probe of replaceWhere, DELETE and UPDATE:
+        returns ``(target, cond, touched)`` — the stats-pruned candidate
+        files of ``base`` read with their ``__file`` column, the condition
+        as a Column (NULL counts as FALSE, so SQL keeps such a row;
+        ``None`` matches every row), and the files holding a match."""
+        candidates = self._touched_candidates(condition)
+        target = self._read_files(
+            candidates,
+            dv_map=base.get("dv") or {},
+            with_lineage=with_lineage,
+            with_file=True,
+            row_base=self._row_base_map(base) if row_ids else None,
+        )
+        cond = (
+            F.coalesce(F.expr(condition), F.lit(False))
+            if condition is not None
+            else F.lit(True)
+        )
+        touched = (
+            [
+                r["__file"]
+                for r in target.where(cond).select("__file").distinct().collect()
+            ]
+            if candidates
+            else []
+        )
+        return target, cond, touched
+
     def identity_columns(self) -> dict[str, tuple[int, int]]:
         """{column: (start, step)} from ``identity.<col>`` properties."""
+        return self._identity_columns_of(self._state()["properties"])
+
+    @staticmethod
+    def _identity_columns_of(props: dict) -> dict[str, tuple[int, int]]:
         out = {}
-        for k, v in self.properties().items():
+        for k, v in props.items():
             if k.startswith("identity."):
                 start, step = (int(x) for x in str(v).split(","))
                 if step == 0:
@@ -2308,14 +2366,14 @@ class LakeTable:
             )
         return df
 
+    @staticmethod
     def _identity_hwm_props(
-        self, adds: list[dict], idcols: dict[str, tuple[int, int]]
+        adds: list[dict], idcols: dict[str, tuple[int, int]], props: dict
     ) -> dict:
         """New high-water marks, free from the parquet footer stats the
         identity columns were auto-enrolled in at creation. Monotone:
         never moves the mark backwards (an overwrite that replaced the
         highest rows must not recycle their ids)."""
-        props = self.properties()
         out: dict = {}
         for icol, (start, step) in idcols.items():
             vals = [
@@ -2405,13 +2463,15 @@ class LakeTable:
         """
         if (txn_app_id is None) != (txn_version is None):
             raise ValueError("txn_app_id and txn_version must be set together")
+        base = self._state()
+        txn = None
         if txn_app_id is not None:
+            txn = (txn_app_id, txn_version)
             last = self.txn_version(txn_app_id)
             if last is not None and txn_version <= last:
-                return self.version()  # replayed batch: no-op
+                return base["version"]  # replayed batch: no-op
         schema_json = None
-        snapshot_version = self.version()
-        write_schema = self.schema()
+        write_schema = self._state_schema(base)
         if merge_schema:
             new_fields = [
                 f for f in df.schema.fields if f.name not in write_schema.fieldNames()
@@ -2420,7 +2480,6 @@ class LakeTable:
                 write_schema = StructType(write_schema.fields + new_fields)
                 schema_json = write_schema.json()
         idcols = self.identity_columns()
-        props_after: dict = {}
         if idcols:
             df = self._assign_identity(df, idcols)
         # metadata fingerprint BEFORE staging: _stage_write validates the
@@ -2430,10 +2489,6 @@ class LakeTable:
         schema_at_stage = write_schema.json()
         cons_at_stage = self.constraints()
         adds, rows = self._stage_write(self._align(df, write_schema))
-        if idcols and rows:
-            props_after.update(self._identity_hwm_props(adds, idcols))
-        if txn_app_id is not None:
-            props_after[f"txn.{txn_app_id}"] = str(txn_version)
         # Commit with APPEND auto-rebase (Delta's blind-append rule): two
         # appends logically commute — neither reads table data — so on a
         # version collision the loser re-reads the log and re-publishes the
@@ -2452,35 +2507,23 @@ class LakeTable:
         # The idempotent-txn guard is re-evaluated per attempt: if the
         # racing winner was a replay of this very transaction, the rebase
         # becomes a no-op (and the orphaned stage is cleaned up).
-        can_rebase = schema_json is None and not any(
-            k.startswith("identityHighWater.") for k in props_after
-        )
+        can_rebase = schema_json is None and not (idcols and rows)
 
         def _discard_stage() -> None:
             roots = {os.sep.join(a["path"].split(os.sep)[:2]) for a in adds}
             for r in roots:
                 shutil.rmtree(self._abs(r), ignore_errors=True)
 
-        v = snapshot_version + 1
         for _ in range(20):
             try:
-                lakelog.write_commit(
-                    self.path,
-                    Commit(
-                        version=v,
-                        operation=operation,
-                        timestamp_ms=lakelog.now_ms(),
-                        add=adds,
-                        schema_json=schema_json,
-                        properties=props_after,
-                        metrics={
-                            "num_inserted_rows": rows,
-                            **(extra_metrics or {}),
-                        },
-                    ),
+                return self._commit(
+                    base,
+                    operation,
+                    add=adds,
+                    schema_json=schema_json,
+                    metrics={"num_inserted_rows": rows, **(extra_metrics or {})},
+                    txn=txn,
                 )
-                self._maybe_auto_compact()
-                return v
             except FileExistsError:
                 if not can_rebase:
                     _discard_stage()  # this stage can never be published
@@ -2497,21 +2540,19 @@ class LakeTable:
                     # metadata conflict: staged rows are unvalidated
                     _discard_stage()
                     raise
-                v = self.version() + 1
+                base = self._state()
         _discard_stage()
         raise FileExistsError(
             f"append to {self.path} lost {20} consecutive commit races"
         )
 
     def overwrite(self, df: DataFrame) -> int:
-        commits = self._commits()
         # checkpoint-aware active set (see replace_definition): a fold over
         # the possibly-log-retention-truncated commit list misses files
         # whose add commit was cleaned, so OVERWRITE would fail to remove
         # them and reads would union stale rows with the new contents
-        state = self._state()
-        removed = list(state["active"])
-        dvmap = state.get("dv") or {}
+        base = self._state()
+        removed = list(base["active"])
         idcols = self.identity_columns()
         if idcols:
             # identity generation applies to EVERY insert-producing write,
@@ -2519,23 +2560,13 @@ class LakeTable:
             # replaced rows' ids are not recycled
             df = self._assign_identity(df, idcols)
         adds, rows = self._stage_write(self._align(df))
-        props_after = (
-            self._identity_hwm_props(adds, idcols) if idcols and rows else {}
+        return self._commit(
+            base,
+            "OVERWRITE",
+            add=adds,
+            remove=removed,
+            metrics={"num_inserted_rows": rows},
         )
-        v = commits[-1].version + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="OVERWRITE",
-                timestamp_ms=lakelog.now_ms(),
-                add=adds,
-                remove=removed + self._dv_release(removed, dvmap),
-                properties=props_after,
-                metrics={"num_inserted_rows": rows},
-            ),
-        )
-        return v
 
     def overwrite_where(self, df: DataFrame, condition: str) -> int:
         """Selective overwrite (Delta's ``option("replaceWhere", cond)``):
@@ -2550,6 +2581,7 @@ class LakeTable:
         ``condition_ranges`` like DELETE, so replacing one partition's worth
         of a clustered 100 TB table scans only the overlapping files.
         """
+        base = self._state()
         bad = (
             df.where(~F.coalesce(F.expr(condition), F.lit(False)))
             .limit(1)
@@ -2560,7 +2592,6 @@ class LakeTable:
                 f"replaceWhere: incoming row violates the predicate "
                 f"({condition}): {bad[0]}"
             )
-        snapshot_version = self.version()
         idcols = self.identity_columns()
         if idcols:
             # localCheckpoint pins the generated ids: the staged write and
@@ -2569,25 +2600,8 @@ class LakeTable:
             # different ids to the same rows (replaceWhere batches are
             # micro-batch scale, so the materialization is cheap)
             df = self._assign_identity(df, idcols).localCheckpoint()
-        state = self._state()
-        dvmap = state.get("dv") or {}
         rt = self.row_tracking_enabled()
-        candidates = self._touched_candidates(condition)
-        target = self._read_files(
-            candidates,
-            dv_map=dvmap,
-            with_file=True,
-            row_base=self._row_base_map(state) if rt else None,
-        )
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        touched = (
-            [
-                r["__file"]
-                for r in target.where(cond).select("__file").distinct().collect()
-            ]
-            if candidates
-            else []
-        )
+        target, cond, touched = self._touched_probe(base, condition, row_ids=rt)
         kept = (
             target.where(F.col("__file").isin(touched)).where(~cond).drop("__file")
             if touched
@@ -2615,34 +2629,22 @@ class LakeTable:
                     replaced.withColumn(CHANGE_TYPE, F.lit("delete"))
                 )
             cdf_rel = self._write_cdf(parts)
-        v = snapshot_version + 1
-        touched_rel = [self._rel_of(f) for f in touched]
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                # distinct op name: OVERWRITE's change feed is synthesized
-                # from the whole file lists, which would double-count (and
-                # mis-classify rewritten kept rows) for a partial replace —
-                # REPLACE materializes its exact row-level changes instead
-                operation="REPLACE",
-                timestamp_ms=lakelog.now_ms(),
-                add=adds,
-                remove=touched_rel + self._dv_release(touched_rel, dvmap),
-                cdf_path=cdf_rel,
-                properties=(
-                    self._identity_hwm_props(adds, idcols)
-                    if idcols and rows
-                    else {}
-                ),
-                metrics={
-                    "num_touched_files": len(touched),
-                    "num_written_rows": rows,
-                    "replace_where": condition,
-                },
-            ),
+        # distinct op name: OVERWRITE's change feed is synthesized from the
+        # whole file lists, which would double-count (and mis-classify
+        # rewritten kept rows) for a partial replace — REPLACE materializes
+        # its exact row-level changes instead
+        return self._commit(
+            base,
+            "REPLACE",
+            add=adds,
+            remove=[self._rel_of(f) for f in touched],
+            cdf_path=cdf_rel,
+            metrics={
+                "num_touched_files": len(touched),
+                "num_written_rows": rows,
+                "replace_where": condition,
+            },
         )
-        return v
 
     def delete(self, condition: str) -> int:
         # micro scope: the touched-probe collect and rewrite/CDF writes
@@ -2669,102 +2671,61 @@ class LakeTable:
         stat-overlapping files, so ``DELETE WHERE key = k`` on a clustered
         100 TB table scans only the key's file(s), not the table.
         """
-        snapshot_version = self.version()
-        state = self._state()
-        dvmap = state.get("dv") or {}
+        base = self._state()
+        dvmap = base.get("dv") or {}
         dv_on = self.dv_enabled()
         # row tracking: the kept-rows rewrite must materialize ids (a DV
         # delete rewrites nothing, so ids are stable there without it)
         rt = self.row_tracking_enabled() and not dv_on
-        candidates = self._touched_candidates(condition)
-        target = self._read_files(
-            candidates,
-            dv_map=dvmap,
-            with_lineage=dv_on,
-            with_file=True,
-            row_base=self._row_base_map(state) if rt else None,
-        )
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        touched = (
-            [
-                r["__file"]
-                for r in target.where(cond).select("__file").distinct().collect()
-            ]
-            if candidates
-            else []
+        target, cond, touched = self._touched_probe(
+            base, condition, with_lineage=dv_on, row_ids=rt
         )
         if not touched:
-            v = snapshot_version + 1
-            lakelog.write_commit(
-                self.path,
-                Commit(version=v, operation="DELETE", timestamp_ms=lakelog.now_ms()),
-            )
-            return v
+            return self._commit(base, "DELETE")
         touched_rows = target.where(F.col("__file").isin(touched))
+        deleted = touched_rows.where(cond)
+        adds, remove, commit_dv = [], [], {}
+        metrics = {"num_touched_files": len(touched)}
         if dv_on:
             # Deletion-vector path: mark the doomed rows in a sidecar; zero
             # data-file rewrite (the Delta DV DELETE). Read-side anti-join
             # subtracts them everywhere (_read_files).
-            doomed = touched_rows.where(cond).persist()
-            commit_dv, removable = self._write_dv(doomed, touched, dvmap)
-            n_del = doomed.count()
-            cdf_rel = None
-            if self.cdf_enabled():
-                cdf_rel = self._write_cdf(
-                    doomed.drop("__file", "__fname", "__pos").withColumn(
-                        CHANGE_TYPE, F.lit("delete")
-                    )
+            deleted = deleted.persist()
+            commit_dv = self._write_dv(deleted, touched, dvmap)
+            metrics = {
+                "num_deleted_rows": deleted.count(),
+                **metrics,
+                "deletion_vector": True,
+            }
+        else:
+            kept = touched_rows.where(~cond).drop("__file")
+            if rt:
+                kept = kept.withColumnRenamed("_row_id", "__row_id")
+                deleted = deleted.drop("_row_id")
+            if kept.limit(1).count():
+                adds, _ = self._stage_write(
+                    self._align(kept, keep=("__row_id",)),
+                    expected_rows=self._touched_rows_upper_bound(touched),
                 )
-            doomed.unpersist()
-            v = snapshot_version + 1
-            lakelog.write_commit(
-                self.path,
-                Commit(
-                    version=v,
-                    operation="DELETE",
-                    timestamp_ms=lakelog.now_ms(),
-                    remove=removable,
-                    cdf_path=cdf_rel,
-                    dv=commit_dv,
-                    metrics={
-                        "num_deleted_rows": n_del,
-                        "num_touched_files": len(touched),
-                        "deletion_vector": True,
-                    },
-                ),
-            )
-            return v
-        kept = touched_rows.where(~cond).drop("__file")
-        deleted = touched_rows.where(cond).drop("__file")
-        if rt:
-            kept = kept.withColumnRenamed("_row_id", "__row_id")
-            deleted = deleted.drop("_row_id")
-        adds, kept_rows = (
-            self._stage_write(
-                self._align(kept, keep=("__row_id",)),
-                expected_rows=self._touched_rows_upper_bound(touched),
-            )
-            if kept.limit(1).count()
-            else ([], 0)
-        )
+            remove = [self._rel_of(f) for f in touched]
         cdf_rel = None
         if self.cdf_enabled():
-            cdf_rel = self._write_cdf(deleted.withColumn(CHANGE_TYPE, F.lit("delete")))
-        v = snapshot_version + 1
-        touched_rel = [self._rel_of(f) for f in touched]
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="DELETE",
-                timestamp_ms=lakelog.now_ms(),
-                add=adds,
-                remove=touched_rel + self._dv_release(touched_rel, dvmap),
-                cdf_path=cdf_rel,
-                metrics={"num_touched_files": len(touched)},
-            ),
+            cdf_rel = self._write_cdf(
+                deleted.drop("__file", "__fname", "__pos").withColumn(
+                    CHANGE_TYPE, F.lit("delete")
+                )
+            )
+        if dv_on:
+            deleted.unpersist()
+        return self._commit(
+            base,
+            "DELETE",
+            add=adds,
+            remove=remove,
+            dv=commit_dv,
+            cdf_path=cdf_rel,
+            metrics=metrics,
         )
-        return v
 
     def update(
         self, assignments: dict[str, str], condition: str | None = None
@@ -2784,7 +2745,9 @@ class LakeTable:
         :meth:`delete` (a NULL-evaluating condition keeps the row
         unmodified); CDF records update_preimage/update_postimage pairs.
         """
-        unknown = set(assignments) - {f.name for f in self.schema().fields}
+        base = self._state()
+        schema = self._state_schema(base)
+        unknown = set(assignments) - {f.name for f in schema.fields}
         if unknown:
             raise ValueError(f"UPDATE of unknown columns: {sorted(unknown)}")
         # GENERATED ALWAYS AS IDENTITY values are immutable: an UPDATE that
@@ -2796,43 +2759,17 @@ class LakeTable:
                 f"{sorted(bad_id)} are GENERATED ALWAYS AS IDENTITY — "
                 "UPDATE may not assign them"
             )
-        snapshot_version = self.version()
-        state = self._state()
-        dvmap = state.get("dv") or {}
+        dvmap = base.get("dv") or {}
         dv_on = self.dv_enabled()
         # row tracking: both rewrite flavors re-stage updated rows, so both
         # materialize their ids
         rt = self.row_tracking_enabled()
-        candidates = self._touched_candidates(condition)
-        target = self._read_files(
-            candidates,
-            dv_map=dvmap,
-            with_lineage=dv_on,
-            with_file=True,
-            row_base=self._row_base_map(state) if rt else None,
-        )
-        cond = (
-            F.coalesce(F.expr(condition), F.lit(False))
-            if condition is not None
-            else F.lit(True)
-        )
-        touched = (
-            [
-                r["__file"]
-                for r in target.where(cond).select("__file").distinct().collect()
-            ]
-            if candidates
-            else []
+        target, cond, touched = self._touched_probe(
+            base, condition, with_lineage=dv_on, row_ids=rt
         )
         if not touched:
-            v = snapshot_version + 1
-            lakelog.write_commit(
-                self.path,
-                Commit(version=v, operation="UPDATE", timestamp_ms=lakelog.now_ms()),
-            )
-            return v
+            return self._commit(base, "UPDATE")
         touched_rows = target.where(F.col("__file").isin(touched))
-        schema = self.schema()
         post_cols = [
             (
                 F.when(cond, F.expr(assignments[f.name]).cast(f.dataType))
@@ -2842,82 +2779,48 @@ class LakeTable:
             ).alias(f.name)
             for f in schema.fields
         ]
+        rid = [F.col("_row_id").alias("__row_id")] if rt else []
+        affected = touched_rows.where(cond)
+        staged, remove, commit_dv = touched_rows, [], {}
+        metrics = {"num_touched_files": len(touched)}
         if dv_on:
             # DV UPDATE (Delta's DV-enabled UPDATE): mark the old versions
             # of updated rows in a sidecar and stage ONLY the updated rows
             # as new data — untouched rows in the file are never rewritten.
-            affected = touched_rows.where(cond).persist()
-            commit_dv, removable = self._write_dv(affected, touched, dvmap)
-            rid = (
-                [F.col("_row_id").alias("__row_id")] if rt else []
-            )
-            post_upd = affected.select(*post_cols, *rid)
-            adds, n_rows = self._stage_write(
-                self._align(post_upd, keep=("__row_id",)),
-                expected_rows=self._touched_rows_upper_bound(touched),
-            )
-            cdf_rel = None
-            if self.cdf_enabled():
-                pre = affected.drop("__file", "__fname", "__pos", "_row_id")
-                cdf_rel = self._write_cdf(
-                    pre.withColumn(
-                        CHANGE_TYPE, F.lit("update_preimage")
-                    ).unionByName(
-                        post_upd.drop("__row_id").withColumn(
-                            CHANGE_TYPE, F.lit("update_postimage")
-                        )
-                    )
-                )
-            affected.unpersist()
-            v = snapshot_version + 1
-            lakelog.write_commit(
-                self.path,
-                Commit(
-                    version=v,
-                    operation="UPDATE",
-                    timestamp_ms=lakelog.now_ms(),
-                    add=adds,
-                    remove=removable,
-                    cdf_path=cdf_rel,
-                    dv=commit_dv,
-                    metrics={
-                        "num_updated_rows": n_rows,
-                        "num_touched_files": len(touched),
-                        "deletion_vector": True,
-                    },
-                ),
-            )
-            return v
-        rid = [F.col("_row_id").alias("__row_id")] if rt else []
-        rewritten = touched_rows.select(*post_cols, *rid)
-        adds, _rows = self._stage_write(
-            self._align(rewritten, keep=("__row_id",)),
+            affected = staged = affected.persist()
+            commit_dv = self._write_dv(affected, touched, dvmap)
+        else:
+            remove = [self._rel_of(f) for f in touched]
+        adds, n_rows = self._stage_write(
+            self._align(staged.select(*post_cols, *rid), keep=("__row_id",)),
             expected_rows=self._touched_rows_upper_bound(touched),
         )
+        if dv_on:
+            metrics = {
+                "num_updated_rows": n_rows,
+                **metrics,
+                "deletion_vector": True,
+            }
         cdf_rel = None
         if self.cdf_enabled():
-            pre = touched_rows.where(cond).drop("__file", "_row_id")
-            post_upd = touched_rows.where(cond).select(*post_cols)
+            pre = affected.drop("__file", "__fname", "__pos", "_row_id")
+            post = affected.select(*post_cols)
             cdf_rel = self._write_cdf(
                 pre.withColumn(CHANGE_TYPE, F.lit("update_preimage")).unionByName(
-                    post_upd.withColumn(CHANGE_TYPE, F.lit("update_postimage"))
+                    post.withColumn(CHANGE_TYPE, F.lit("update_postimage"))
                 )
             )
-        v = snapshot_version + 1
-        touched_rel = [self._rel_of(f) for f in touched]
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="UPDATE",
-                timestamp_ms=lakelog.now_ms(),
-                add=adds,
-                remove=touched_rel + self._dv_release(touched_rel, dvmap),
-                cdf_path=cdf_rel,
-                metrics={"num_touched_files": len(touched)},
-            ),
+        if dv_on:
+            affected.unpersist()
+        return self._commit(
+            base,
+            "UPDATE",
+            add=adds,
+            remove=remove,
+            dv=commit_dv,
+            cdf_path=cdf_rel,
+            metrics=metrics,
         )
-        return v
 
     def compact(
         self,
@@ -2973,10 +2876,9 @@ class LakeTable:
         """
         if cluster_by and zorder_by:
             raise ValueError("pass either cluster_by or zorder_by, not both")
-        commits = self._commits()
-        state = self._state()
-        active = state["active"]
-        dvmap = state.get("dv") or {}
+        base = self._state()
+        active = base["active"]
+        dvmap = base.get("dv") or {}
         if max_input_file_rows is not None:
             # incremental OPTIMIZE: rewrite only under-sized files (plus any
             # DV-carrying file, whose vector gets materialized) — the
@@ -3033,17 +2935,11 @@ class LakeTable:
             }
             selected = {rel: a for rel, a in selected.items() if rel in keep}
         if not selected:
-            v = commits[-1].version + 1
-            lakelog.write_commit(
-                self.path,
-                Commit(
-                    version=v,
-                    operation="COMPACT",
-                    timestamp_ms=lakelog.now_ms(),
-                    metrics={"num_files_before": 0, "num_files_after": 0},
-                ),
+            return self._commit(
+                base,
+                "COMPACT",
+                metrics={"num_files_before": 0, "num_files_after": 0},
             )
-            return v
         removed = sorted(selected)
         total_rows = sum(a.get("rows", 0) for a in selected.values())
         n_files = max(1, (total_rows + target_file_rows - 1) // target_file_rows)
@@ -3051,7 +2947,7 @@ class LakeTable:
         df = self._read_files(
             [self._abs(r) for r in removed],
             dv_map={r: dvmap[r] for r in removed if r in dvmap} or None,
-            row_base=self._row_base_map(state) if rt else None,
+            row_base=self._row_base_map(base) if rt else None,
         )
         if rt:
             # OPTIMIZE is purely physical: ids must survive the rewrite
@@ -3070,26 +2966,19 @@ class LakeTable:
         else:
             df = df.coalesce(n_files)
         adds, rows = self._stage_write(self._align(df, keep=("__row_id",)))
-        v = commits[-1].version + 1
-        dvmap = self._state().get("dv") or {}
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="COMPACT",
-                timestamp_ms=lakelog.now_ms(),
-                add=adds,
-                # compaction physically applies DVs (to_df reads through
-                # them), so the rewritten files' sidecars are released
-                remove=removed + self._dv_release(removed, dvmap),
-                metrics={
-                    "num_files_before": len(removed),
-                    "num_files_after": len(adds),
-                    "num_rows": rows,
-                },
-            ),
+        # compaction physically applies DVs (to_df reads through them), so
+        # the rewritten files' sidecars are released with them
+        return self._commit(
+            base,
+            "COMPACT",
+            add=adds,
+            remove=removed,
+            metrics={
+                "num_files_before": len(removed),
+                "num_files_after": len(adds),
+                "num_rows": rows,
+            },
         )
-        return v
 
     def restore(self, version: int) -> int:
         """RESTORE TABLE ... TO VERSION AS OF: roll the live snapshot back
@@ -3102,12 +2991,11 @@ class LakeTable:
         like OVERWRITE), plus row-level insert/delete diffs for surviving
         files whose deletion vector the rollback re-pointed. Restoring past files VACUUM already deleted is an
         error, matching Delta."""
-        commits = self._commits()
-        snap_v = commits[-1].version
+        current_state = self._state()
+        snap_v = current_state["version"]
         if not 0 <= version <= snap_v:
             raise ValueError(f"cannot restore to v{version}: latest is v{snap_v}")
         target_state = self._state(version)
-        current_state = self._state()
         target_active = target_state["active"]
         current_active = current_state["active"]
         target_dv = target_state.get("dv") or {}
@@ -3137,27 +3025,18 @@ class LakeTable:
                 f"cannot restore to v{version}: {len(missing)} data file(s) "
                 f"already vacuumed (e.g. {missing[0]})"
             )
-        released = sorted(
-            set(current_dv.values()) - set(target_dv.values())
+        return self._commit(
+            current_state,
+            "RESTORE",
+            add=add,
+            remove=remove,
+            dv=dv_patch,
+            metrics={
+                "restored_version": version,
+                "num_restored_files": len(add),
+                "num_removed_files": len(remove),
+            },
         )
-        v = snap_v + 1
-        lakelog.write_commit(
-            self.path,
-            Commit(
-                version=v,
-                operation="RESTORE",
-                timestamp_ms=lakelog.now_ms(),
-                add=add,
-                remove=remove + released,
-                dv=dv_patch,
-                metrics={
-                    "restored_version": version,
-                    "num_restored_files": len(add),
-                    "num_removed_files": len(remove),
-                },
-            ),
-        )
-        return v
 
     # Minimum age for the mtime-based sweeps below (orphaned stage dirs,
     # crashed-writer tmp commit files). Unlike the reference-counted pass —
@@ -3436,12 +3315,11 @@ class LakeTable:
 
     def _write_dv(
         self, marked: DataFrame, touched: list[str], dv_map: dict
-    ) -> tuple[dict, list[str]]:
+    ) -> dict:
         """Write one cumulative deletion-vector parquet for ``touched``
         files: newly ``marked`` rows (must carry __fname/__pos lineage)
-        unioned with the files' existing DV rows. Returns (commit_dv,
-        removable_old_dv_paths). An old DV file is removable only when no
-        UNtouched file still points at it (shared-sidecar refcount)."""
+        unioned with the files' existing DV rows. Returns the commit's DV
+        reassignments; ``_commit`` releases the sidecars they replace."""
         touched_rel = [self._rel_of(f) for f in touched]
         new_rows = marked.select(
             F.col("__fname").alias("file_name"), F.col("__pos").alias("row_index")
@@ -3456,20 +3334,7 @@ class LakeTable:
         # markers (micro-op scale); a delete big enough to produce a huge DV
         # should use the rewrite path instead
         new_rows.coalesce(1).write.mode("overwrite").parquet(self._abs(dv_rel))
-        removable = self._dv_release(touched_rel, dv_map)
-        return {r: dv_rel for r in touched_rel}, removable
-
-    @staticmethod
-    def _dv_release(removed_rels: list[str], dv_map: dict) -> list[str]:
-        """DV sidecar files freed when ``removed_rels`` data files leave the
-        snapshot (or get fresh DVs): an old sidecar is released only when no
-        surviving dv pointer still references it. Released paths go into
-        the commit's remove list so VACUUM reclaims them after retention."""
-        removed = set(removed_rels)
-        refs_after = {dv for f, dv in dv_map.items() if f not in removed}
-        return sorted(
-            {dv_map[r] for r in removed if r in dv_map} - refs_after
-        )
+        return {r: dv_rel for r in touched_rel}
 
     def _write_cdf(self, df: DataFrame, expected_rows: int | None = None) -> str:
         rel = os.path.join(CDF_DIR, uuid.uuid4().hex)
@@ -3550,7 +3415,16 @@ class LakeTable:
         """
         if (txn_app_id is None) != (txn_version is None):
             raise ValueError("txn_app_id and txn_version must be set together")
+        # Optimistic concurrency: pin the snapshot the whole operation
+        # reads from — schema included — before anything else; committing
+        # as base + 1 makes any intervening writer's commit collide
+        # (FileExistsError) instead of being silently built over
+        # (write-skew).
+        base = self._state()
+        old_schema = self._state_schema(base)
+        txn = None
         if txn_app_id is not None:
+            txn = (txn_app_id, txn_version)
             last = self.txn_version(txn_app_id)
             if last is not None and txn_version <= last:
                 return {  # replayed batch: no-op before any data work
@@ -3559,7 +3433,7 @@ class LakeTable:
                     "num_updated_rows": 0,
                     "num_inserted_rows": 0,
                     "num_written_rows": 0,
-                    "version": self.version(),
+                    "version": base["version"],
                     "replayed_txn": True,
                 }
         if any(
@@ -3569,7 +3443,7 @@ class LakeTable:
             # their unqualified target-column references so they resolve
             # identically in the target-only planning probe AND the
             # two-sided rewrite join (see _qualify_target_refs)
-            tcols = set(self.schema().fieldNames())
+            tcols = set(old_schema.fieldNames())
             clauses = [
                 MergeClause(
                     c.kind,
@@ -3611,7 +3485,7 @@ class LakeTable:
         # column still covers it — it must NOT land in target_only (a valid
         # NOT MATCHED condition referencing it would be falsely rejected)
         target_only = {
-            f.name.lower() for f in self.schema().fields
+            f.name.lower() for f in old_schema.fields
         } - {c.lower() for c in source.columns}
         for c in insert_clauses:
             # NOT MATCHED candidates have no target row, so their conditions
@@ -3640,7 +3514,6 @@ class LakeTable:
                         f"target-only column(s) {bad_refs}): there is no "
                         "target row for an insert candidate"
                     )
-        old_schema = self.schema()
         old_cols = set(old_schema.fieldNames())
         write_schema = old_schema
         schema_json = None
@@ -3653,17 +3526,12 @@ class LakeTable:
                 schema_json = write_schema.json()
         tgt_cols = [f.name for f in write_schema.fields]
         tgt_types = {f.name: f.dataType for f in write_schema.fields}
-        # Optimistic concurrency: capture the snapshot version the whole
-        # operation reads from; committing as snapshot+1 makes any
-        # intervening writer's commit collide (FileExistsError) instead of
-        # being silently built over (write-skew).
-        snapshot_version = self.version()
 
         # Data skipping: when the merge keys have file stats, restrict the
         # target read to files whose key range overlaps the batch's. Rows in
         # skipped files cannot match any source row (equi-key), so every
         # downstream join — probe, rewrite, anti-join — is unaffected.
-        target_empty = not self.files()
+        target_empty = not base["active"]
         prune_map = {
             t: s for t, s in (stats_prune or {}).items() if t in self.stats_columns()
         }
@@ -3675,8 +3543,7 @@ class LakeTable:
             # these merges must see the whole target (inherent to the
             # semantics: Delta's by-source merges scan the full target too)
             prune_map = {}
-        state = self._state()
-        if prune_map and len(state["active"]) <= MERGE_PRUNE_MIN_FILES:
+        if prune_map and len(base["active"]) <= MERGE_PRUNE_MIN_FILES:
             # Pruning pays a dedicated source pass (the min/max bounds job)
             # to save target-file reads. With only a handful of active files
             # the best case saves almost nothing, so the bounds job is pure
@@ -3698,7 +3565,7 @@ class LakeTable:
         # optimizer's own sizeInBytes for the batch plan — a 100 TB initial
         # load keeps AQE for its dedup window; a micro batch provably
         # doesn't need it). Performance-only either way.
-        active_rows = [a.get("rows") for a in state["active"].values()]
+        active_rows = [a.get("rows") for a in base["active"].values()]
         total_target_rows = (
             sum(active_rows) if all(r is not None for r in active_rows) else None
         )
@@ -3741,16 +3608,16 @@ class LakeTable:
             }
             read_files = self.files_matching(ranges)
         else:
-            read_files = [self._abs(r) for r in state["active"]]
+            read_files = [self._abs(r) for r in base["active"]]
         # row tracking: survivors of the rewrite (matched updates, kept
         # rows, by-source updates) must carry their ids into the staged
         # files; inserts derive fresh ids from the new files' bases
         rt = self.row_tracking_enabled() and not target_empty
         target_df = self._read_files(
             read_files,
-            dv_map=state.get("dv") or None,
+            dv_map=base.get("dv") or None,
             with_file=True,
-            row_base=self._row_base_map(state) if rt else None,
+            row_base=self._row_base_map(base) if rt else None,
         )
         # Metadata-driven join strategy: the log carries EXACT per-file row
         # counts, so when the live target is provably small (an aggregate
@@ -3765,7 +3632,7 @@ class LakeTable:
         # undercounting it as 0 (a wrong broadcast of a huge target is far
         # worse than a missed one).
         rows_by_rel = {
-            self._abs(r): a.get("rows") for r, a in state["active"].items()
+            self._abs(r): a.get("rows") for r, a in base["active"].items()
         }
         read_counts = [rows_by_rel.get(p) for p in read_files]
         known_rows = (
@@ -3973,7 +3840,7 @@ class LakeTable:
                 # untouched rows carry NULL (schema-on-read)
                 if colname in old_cols:
                     return f"target.`{_bq(colname)}`"
-                return f"CAST(NULL AS {tgt_types[colname].simpleString()})"
+                return f"CAST(NULL AS {_sql_type(tgt_types[colname])})"
 
             def post_exprs(
                 include_matched: bool, include_bs: bool
@@ -4139,8 +4006,7 @@ class LakeTable:
                 # optimized write: output size is known exactly from the
                 # log's per-file row counts — survivors = touched - deletes
                 active_rows = {
-                    rel: a.get("rows", 0)
-                    for rel, a in self._state()["active"].items()
+                    rel: a.get("rows", 0) for rel, a in base["active"].items()
                 }
                 touched_total = sum(
                     active_rows.get(self._rel_of(f), 0) for f in touched
@@ -4300,38 +4166,16 @@ class LakeTable:
                 "num_inserted_rows": n_ins,
                 "num_written_rows": written_rows,
             }
-            v = snapshot_version + 1
-            touched_rel = [self._rel_of(f) for f in touched]
-            dvmap = self._state().get("dv") or {}
-            lakelog.write_commit(
-                self.path,
-                Commit(
-                    version=v,
-                    operation="MERGE",
-                    timestamp_ms=lakelog.now_ms(),
-                    add=adds,
-                    remove=touched_rel + self._dv_release(touched_rel, dvmap),
-                    cdf_path=cdf_rel,
-                    schema_json=schema_json,
-                    properties={
-                        **(
-                            self._identity_hwm_props(
-                                adds, self.identity_columns()
-                            )
-                            if adds and self.identity_columns()
-                            else {}
-                        ),
-                        **(
-                            {f"txn.{txn_app_id}": str(txn_version)}
-                            if txn_app_id is not None
-                            else {}
-                        ),
-                    },
-                    metrics=metrics,
-                ),
+            metrics["version"] = self._commit(
+                base,
+                "MERGE",
+                add=adds,
+                remove=[self._rel_of(f) for f in touched],
+                cdf_path=cdf_rel,
+                schema_json=schema_json,
+                metrics=metrics,
+                txn=txn,
             )
-            metrics["version"] = v
-            self._maybe_auto_compact()
             return metrics
         finally:
             s_joined.unpersist()

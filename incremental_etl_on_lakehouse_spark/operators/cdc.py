@@ -498,84 +498,83 @@ def _incremental_minmax_update_impl(
     joined = ar.join(cur_r, cur_cond, "left").drop(
         *[f"__c_{c}" for c in group_cols]
     ).persist()
-    has_rem = F.col("__dec_min").isNotNull()
-    need_recompute = has_rem & (
-        F.col("__cur_min").isNull()
-        | (F.col("__dec_min") <= F.col("__cur_min"))
-        | (F.col("__dec_max") >= F.col("__cur_max"))
-    )
-    recompute_groups = joined.where(need_recompute).select(*group_cols)
-    is_mono = (~need_recompute) & (
-        F.col("__inc_min").isNotNull()
-        & (
+    try:
+        has_rem = F.col("__dec_min").isNotNull()
+        need_recompute = has_rem & (
             F.col("__cur_min").isNull()
-            | (F.col("__inc_min") < F.col("__cur_min"))
-            | (F.col("__inc_max") > F.col("__cur_max"))
+            | (F.col("__dec_min") <= F.col("__cur_min"))
+            | (F.col("__dec_max") >= F.col("__cur_max"))
         )
-    )
-    # monotone groups: additions only touch extremes outward; rows with no
-    # possible change are excluded so a no-op batch rewrites zero files
-    mono = joined.where(is_mono).select(
-        *group_cols,
-        F.least("__inc_min", "__cur_min").alias(min_col),
-        F.greatest("__inc_max", "__cur_max").alias(max_col),
-        F.lit("UPSERT").alias("__op"),
-    )
-    # Gate the base-table branch on an actual recompute being needed, and
-    # the merge on anything changing at all — ONE classification job over
-    # the persisted micro-batch-scale aggregate (the previous shape paid
-    # two isEmpty jobs: one here, one on the assembled source). In the
-    # common all-monotone batch the base table is never scanned at all.
-    # Equivalence of the single probe: with recomputes present the merge
-    # source is never empty (every recompute group lands in exactly one of
-    # recomputed/vanished), so the old source.isEmpty() early-return could
-    # only fire in the recompute-free case — which n_mono == 0 covers.
-    counts = joined.select(
-        F.sum(F.when(need_recompute, 1).otherwise(0)).alias("__n_rec"),
-        F.sum(F.when(is_mono, 1).otherwise(0)).alias("__n_mono"),
-    ).collect()[0]
-    n_rec = counts["__n_rec"] or 0
-    n_mono = counts["__n_mono"] or 0
-    if n_rec == 0 and n_mono == 0:
-        joined.unpersist()
-        return  # nothing can change: no commit, no file writes
-    if n_rec == 0:
-        source = mono
-    else:
-        rg_r, rg_cond = _ns(base, recompute_groups, "__rg_")
-        recomputed = (
-            base.join(bc(rg_r), rg_cond, "left_semi")
-            .groupBy(*group_cols)
-            .agg(
-                F.min(value_col).alias(min_col),
-                F.max(value_col).alias(max_col),
+        recompute_groups = joined.where(need_recompute).select(*group_cols)
+        is_mono = (~need_recompute) & (
+            F.col("__inc_min").isNotNull()
+            & (
+                F.col("__cur_min").isNull()
+                | (F.col("__inc_min") < F.col("__cur_min"))
+                | (F.col("__inc_max") > F.col("__cur_max"))
             )
         )
-        rc_r, rc_cond = _ns(recompute_groups, recomputed, "__rc_")
-        vanished = recompute_groups.join(
-            rc_r, rc_cond, "left_anti"
-        ).select(
+        # monotone groups: additions only touch extremes outward; rows with no
+        # possible change are excluded so a no-op batch rewrites zero files
+        mono = joined.where(is_mono).select(
             *group_cols,
-            F.lit(None).cast(gold.schema()[min_col].dataType).alias(min_col),
-            F.lit(None).cast(gold.schema()[max_col].dataType).alias(max_col),
-            F.lit("DELETE").alias("__op"),
+            F.least("__inc_min", "__cur_min").alias(min_col),
+            F.greatest("__inc_max", "__cur_max").alias(max_col),
+            F.lit("UPSERT").alias("__op"),
         )
-        source = recomputed.withColumn("__op", F.lit("UPSERT")).unionByName(
-            vanished
-        ).unionByName(mono)
-    # null-safe equality: a NULL group key is a legal GROUP BY group; with
-    # plain `=` its state row would never match and every refresh would
-    # insert a duplicate partial row
-    cond = " AND ".join(f"source.`{k}` <=> target.`{k}`" for k in group_cols)
-    assignments = {min_col: f"source.`{min_col}`", max_col: f"source.`{max_col}`"}
-    insert_assignments = {k: f"source.`{k}`" for k in group_cols}
-    insert_assignments.update(assignments)
-    clauses = [
-        MergeClause("delete", "source.`__op` = 'DELETE'"),
-        MergeClause("update", "source.`__op` = 'UPSERT'", assignments),
-        MergeClause("insert", "source.`__op` <> 'DELETE'", insert_assignments),
-    ]
-    try:
+        # Gate the base-table branch on an actual recompute being needed, and
+        # the merge on anything changing at all — ONE classification job over
+        # the persisted micro-batch-scale aggregate (the previous shape paid
+        # two isEmpty jobs: one here, one on the assembled source). In the
+        # common all-monotone batch the base table is never scanned at all.
+        # Equivalence of the single probe: with recomputes present the merge
+        # source is never empty (every recompute group lands in exactly one of
+        # recomputed/vanished), so the old source.isEmpty() early-return could
+        # only fire in the recompute-free case — which n_mono == 0 covers.
+        counts = joined.select(
+            F.sum(F.when(need_recompute, 1).otherwise(0)).alias("__n_rec"),
+            F.sum(F.when(is_mono, 1).otherwise(0)).alias("__n_mono"),
+        ).collect()[0]
+        n_rec = counts["__n_rec"] or 0
+        n_mono = counts["__n_mono"] or 0
+        if n_rec == 0 and n_mono == 0:
+            return  # nothing can change: no commit, no file writes
+        if n_rec == 0:
+            source = mono
+        else:
+            rg_r, rg_cond = _ns(base, recompute_groups, "__rg_")
+            recomputed = (
+                base.join(bc(rg_r), rg_cond, "left_semi")
+                .groupBy(*group_cols)
+                .agg(
+                    F.min(value_col).alias(min_col),
+                    F.max(value_col).alias(max_col),
+                )
+            )
+            rc_r, rc_cond = _ns(recompute_groups, recomputed, "__rc_")
+            vanished = recompute_groups.join(
+                rc_r, rc_cond, "left_anti"
+            ).select(
+                *group_cols,
+                F.lit(None).cast(gold.schema()[min_col].dataType).alias(min_col),
+                F.lit(None).cast(gold.schema()[max_col].dataType).alias(max_col),
+                F.lit("DELETE").alias("__op"),
+            )
+            source = recomputed.withColumn("__op", F.lit("UPSERT")).unionByName(
+                vanished
+            ).unionByName(mono)
+        # null-safe equality: a NULL group key is a legal GROUP BY group; with
+        # plain `=` its state row would never match and every refresh would
+        # insert a duplicate partial row
+        cond = " AND ".join(f"source.`{k}` <=> target.`{k}`" for k in group_cols)
+        assignments = {min_col: f"source.`{min_col}`", max_col: f"source.`{max_col}`"}
+        insert_assignments = {k: f"source.`{k}`" for k in group_cols}
+        insert_assignments.update(assignments)
+        clauses = [
+            MergeClause("delete", "source.`__op` = 'DELETE'"),
+            MergeClause("update", "source.`__op` = 'UPSERT'", assignments),
+            MergeClause("insert", "source.`__op` <> 'DELETE'", insert_assignments),
+        ]
         gold.merge(source, cond, clauses)
     finally:
         joined.unpersist()

@@ -33,12 +33,20 @@ from incremental_etl_on_lakehouse_spark.queries import _s5_pipeline  # noqa: F40
 from incremental_etl_on_lakehouse_spark.queries import _s6_tpch  # noqa: F401,E402
 from incremental_etl_on_lakehouse_spark.queries import _s7_extras  # noqa: F401,E402
 
-# bench.py resets this cache alongside the two in _core
-from incremental_etl_on_lakehouse_spark.queries._s2_relational import (  # noqa: E402
-    _CDC_MINMAX_CACHE,
-    _CDC_TOPK_CACHE,
-    _JOIN_VIEW_CACHE,
-)
+from incremental_etl_on_lakehouse_spark.queries import _core  # noqa: E402
+
+
+def reset_memoized_state() -> None:
+    """Clear every module-level ``_*_CACHE`` memo of the query scenarios
+    (CDC tables, maintained views), so the next call of a key rebuilds it
+    end to end instead of re-reading a cached table."""
+    for mod in (
+        _core, _s1_lake, _s2_relational, _s3_ext, _s4_relational2,
+        _s5_pipeline, _s6_tpch, _s7_extras,
+    ):
+        for name, val in vars(mod).items():
+            if name.startswith("_") and name.endswith("_CACHE"):
+                val.clear()
 
 # ---------------------------------------------------------------------------
 # Driver-verification priority order.

@@ -21,6 +21,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # restores the whole pool for the end-of-round soak.
 _FULL_SUITE = os.environ.get("SPARK_GRAFT_FULL_SUITE") == "1"
 _SEED_CAP = 2
+_SEED_CAP_DROPPED = pytest.StashKey[int]()
 
 
 def pytest_collection_modifyitems(config, items):
@@ -48,6 +49,16 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = kept
+    config.stash[_SEED_CAP_DROPPED] = len(dropped)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    dropped = config.stash.get(_SEED_CAP_DROPPED, None)
+    if dropped is not None:
+        terminalreporter.write_line(
+            f"seed cap active: {dropped} deselected "
+            "(SPARK_GRAFT_FULL_SUITE=1 for full pools)"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -30,7 +30,10 @@ def main() -> None:
     ap.add_argument("--explain", default=None, help="tag: write plans/$SPARK_GRAFT_PLANS_DIR/<key>_<tag>.txt (default r13)")
     args = ap.parse_args()
 
-    from incremental_etl_on_lakehouse_spark.queries import QUERIES
+    from incremental_etl_on_lakehouse_spark.queries import (
+        QUERIES,
+        reset_memoized_state,
+    )
     from incremental_etl_on_lakehouse_spark.session import get_spark
 
     # NOTE: unlike bench.py, do NOT clear /tmp/lakequery-* here — a
@@ -46,23 +49,13 @@ def main() -> None:
         warm_sf = args.sf
     QUERIES["agg_incremental_cdf"](spark, warm_sf).collect()
 
-    def reset() -> None:
-        from incremental_etl_on_lakehouse_spark import queries as qmod
-
-        qmod._CDC_SILVER_CACHE.clear()
-        qmod._CDC_GOLD_CACHE.clear()
-        qmod._CDC_MINMAX_CACHE.clear()
-        qmod._CDC_TOPK_CACHE.clear()
-        qmod._JOIN_VIEW_CACHE.clear()
-        qmod._core._CDC_MEDIAN_CACHE = getattr(qmod._core, "_CDC_MEDIAN_CACHE", {})
-
     tracker = sc.statusTracker()
 
     for key in args.keys:
         fn = QUERIES[key]
         results = []
         for i in range(args.runs):
-            reset()
+            reset_memoized_state()
             jobs_before = tracker.getJobIdsForGroup(None) or []
             # job ids are global and increasing; snapshot the max
             t0 = time.perf_counter()
@@ -87,7 +80,7 @@ def main() -> None:
             flush=True,
         )
         if args.explain:
-            reset()
+            reset_memoized_state()
             df = fn(spark, args.sf)
             out_dir = os.path.join(
                 os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
